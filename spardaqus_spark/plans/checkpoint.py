@@ -106,5 +106,6 @@ def filter_resume(df: "DataFrame", run_dir: str | Path) -> "DataFrame":
     if not done:
         return df
     spark = df.sparkSession
+    # py-rdd-ok: one tiny frame per resumed run, not per batch or bucket
     done_df = spark.createDataFrame([(int(b),) for b in done], "bucket int")
     return df.join(F.broadcast(done_df), "bucket", "left_anti")

@@ -2,9 +2,18 @@
 (run_id, attempt, stage, partition_id, bucket, files_in, files_out,
 rule_hit_counts).
 
-Realized as a single whole-stage-codegen aggregation over
-``spark_partition_id()`` — no Python in the path; at 10^12 rows this is a
-partial+final hash agg producing one row per (partition, bucket).
+Both paths derive every stage row from ONE tiny ledger of counts, because
+the fused ``mapInPandas`` makes the stage boundaries logical, not
+physical:
+
+- batch: ``ledger`` is a single whole-stage-codegen scan of the verdict
+  frame (``posexplode_outer(rule_hits)`` + a two-level hash agg) giving
+  per (partition_id, bucket) the row, dedup-survivor and kept counts plus
+  the rule-hit map. Stage rows explode from it with no join; the caller
+  persists it so lineage and the per-bucket commit list share the scan.
+- streaming: the caller collects per-partition (rows, kept) counts in
+  one aggregate and ``stream_lineage_rows`` turns them, plus the
+  sink-observed write count, into the micro-batch's rows on the driver.
 """
 
 from __future__ import annotations
@@ -12,68 +21,73 @@ from __future__ import annotations
 from typing import TYPE_CHECKING
 
 if TYPE_CHECKING:
+    import pandas as pd
     from pyspark.sql import DataFrame
 
-LINEAGE_SCHEMA = (
-    "run_id string, attempt int, stage string, partition_id int, bucket int, "
-    "files_in bigint, files_out bigint, rule_hit_counts map<string,bigint>"
-)
+
+def ledger(df_verdict: "DataFrame") -> "DataFrame":
+    """One scan of a verdict frame (needs bucket, dup_loser, keep,
+    rule_hits) -> per (partition_id, bucket): n_all, n_surv, n_keep and
+    rule_hit_counts (NULL when no rule fired in the group).
+
+    ``posexplode_outer`` yields one row per rule hit and a single
+    (NULL, NULL) row for a hit-less file, so ``pos`` NULL-or-0 marks
+    exactly one row per input file: the first level counts files and hits
+    per (partition, bucket, rule), the second folds the rules into a map.
+    """
+    from pyspark.sql import functions as F
+
+    first = F.col("pos").isNull() | (F.col("pos") == 0)
+
+    def files(cond):
+        return F.sum((first & cond).cast("long"))
+
+    per_rule = (
+        df_verdict.select(
+            F.spark_partition_id().alias("partition_id"),
+            "bucket",
+            "dup_loser",
+            "keep",
+            F.posexplode_outer("rule_hits").alias("pos", "rule"),
+        )
+        .groupBy("partition_id", "bucket", "rule")
+        .agg(
+            files(F.lit(True)).alias("n_all"),
+            files(~F.col("dup_loser")).alias("n_surv"),
+            files(F.col("keep")).alias("n_keep"),
+            F.count("rule").alias("n"),
+        )
+    )
+    hits = F.sort_array(
+        F.collect_list(F.when(F.col("rule").isNotNull(), F.struct("rule", "n")))
+    )
+    return per_rule.groupBy("partition_id", "bucket").agg(
+        F.sum("n_all").alias("n_all"),
+        F.sum("n_surv").alias("n_surv"),
+        F.sum("n_keep").alias("n_keep"),
+        F.when(F.size(hits) > 0, F.map_from_entries(hits)).alias(
+            "rule_hit_counts"
+        ),
+    )
 
 
 def collect_lineage(
     df_verdict: "DataFrame", run_id: str, attempt: int = 1, stage: str = "verdict"
 ) -> "DataFrame":
-    """Aggregate lineage from a verdict-stage frame (needs keep, rule_hits,
-    bucket columns)."""
+    """Lineage of a single stage from a verdict-stage frame: files_in = all
+    rows, files_out = kept rows, with the rule-hit map."""
     from pyspark.sql import functions as F
 
-    exploded = (
-        df_verdict.select(
-            F.spark_partition_id().alias("partition_id"),
-            "bucket",
-            "keep",
-            "rule_hits",
-        )
-        .withColumn("rule", F.explode_outer("rule_hits"))
+    return ledger(df_verdict).select(
+        F.lit(run_id).alias("run_id"),
+        F.lit(attempt).alias("attempt"),
+        F.lit(stage).alias("stage"),
+        "partition_id",
+        "bucket",
+        F.col("n_all").alias("files_in"),
+        F.col("n_keep").alias("files_out"),
+        "rule_hit_counts",
     )
-    per_rule = (
-        exploded.groupBy("partition_id", "bucket", "rule")
-        .agg(F.count(F.col("rule")).alias("n"))
-        .filter(F.col("rule").isNotNull())
-        .groupBy("partition_id", "bucket")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("rule", "n")))
-            ).alias("rule_hit_counts")
-        )
-    )
-    base = (
-        df_verdict.select(
-            F.spark_partition_id().alias("partition_id"), "bucket", "keep"
-        )
-        .groupBy("partition_id", "bucket")
-        .agg(
-            F.count("*").alias("files_in"),
-            F.sum(F.col("keep").cast("long")).alias("files_out"),
-        )
-    )
-    out = (
-        base.join(per_rule, ["partition_id", "bucket"], "left")
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("attempt", F.lit(attempt))
-        .withColumn("stage", F.lit(stage))
-        .select(
-            "run_id",
-            "attempt",
-            "stage",
-            "partition_id",
-            "bucket",
-            "files_in",
-            "files_out",
-            "rule_hit_counts",
-        )
-    )
-    return out
 
 
 PIPELINE_STAGES = ("dedup", "score", "verdict", "scrub", "write")
@@ -86,10 +100,19 @@ def collect_lineage_all_stages(
     write_counts: dict[int, int] | None = None,
 ) -> "DataFrame":
     """Per-partition lineage for EVERY pipeline stage ([B:6] 'every stage
-    writes per-partition lineage rows') from the fused verdict frame in a
-    single codegen aggregation pass — the fused mapInPandas means the
-    stage boundaries exist logically, not physically, so their in/out
-    counts are derivable exactly from (dup_loser, keep):
+    writes per-partition lineage rows') from the fused verdict frame —
+    ``stage_rows`` over a fresh ``ledger``; see there."""
+    return stage_rows(ledger(df_verdict), run_id, attempt, write_counts)
+
+
+def stage_rows(
+    ledger_df: "DataFrame",
+    run_id: str,
+    attempt: int = 1,
+    write_counts: dict[int, int] | None = None,
+) -> "DataFrame":
+    """Explode a ``ledger`` into the per-stage lineage rows — in/out
+    counts follow exactly from (dup_loser, keep):
 
       dedup:   in = all rows,   out = dedup survivors (!dup_loser)
       score:   in = all rows,   out = all rows (scoring drops nothing)
@@ -106,43 +129,30 @@ def collect_lineage_all_stages(
                e.g. conservation tests) files_out falls back to the
                derived n_keep.
 
-    One groupBy(partition, bucket) -> exploded stage rows per group;
     rule_hit_counts attach to the verdict stage only."""
     from pyspark.sql import functions as F
 
-    base = (
-        df_verdict.select(
-            F.spark_partition_id().alias("partition_id"),
-            "bucket",
-            "dup_loser",
-            "keep",
+    def row(stage, fi, fo):
+        return F.struct(
+            F.lit(stage).alias("stage"),
+            F.col(fi).alias("files_in"),
+            F.col(fo).alias("files_out"),
         )
-        .groupBy("partition_id", "bucket")
-        .agg(
-            F.count("*").alias("n_all"),
-            F.sum((~F.col("dup_loser")).cast("long")).alias("n_surv"),
-            F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        )
-    )
+
     derived = [
-        F.struct(F.lit("dedup").alias("stage"), F.col("n_all").alias("fi"), F.col("n_surv").alias("fo")),
-        F.struct(F.lit("score").alias("stage"), F.col("n_all").alias("fi"), F.col("n_all").alias("fo")),
-        F.struct(F.lit("verdict").alias("stage"), F.col("n_all").alias("fi"), F.col("n_keep").alias("fo")),
-        F.struct(F.lit("scrub").alias("stage"), F.col("n_keep").alias("fi"), F.col("n_keep").alias("fo")),
+        row("dedup", "n_all", "n_surv"),
+        row("score", "n_all", "n_all"),
+        row("verdict", "n_all", "n_keep"),
+        row("scrub", "n_keep", "n_keep"),
     ]
     if write_counts is None:
-        derived.append(
-            F.struct(F.lit("write").alias("stage"), F.col("n_keep").alias("fi"), F.col("n_keep").alias("fo"))
-        )
-    per_stage = base.select(
-        "partition_id", "bucket", F.explode(F.array(*derived)).alias("s")
-    ).select(
+        derived.append(row("write", "n_keep", "n_keep"))
+    per_stage = ledger_df.select(
         "partition_id",
         "bucket",
-        F.col("s.stage").alias("stage"),
-        F.col("s.fi").alias("files_in"),
-        F.col("s.fo").alias("files_out"),
-    )
+        "rule_hit_counts",
+        F.explode(F.array(*derived)).alias("s"),
+    ).select("partition_id", "bucket", "rule_hit_counts", "s.*")
     if write_counts is not None:
         # sink-grained write rows: files_in = kept rows entering the write
         # (derived), files_out = the count the write job actually committed
@@ -154,8 +164,8 @@ def collect_lineage_all_stages(
             fo = F.coalesce(observed[F.col("bucket")], F.lit(0))
         else:  # resumed run with nothing left to write: zero committed
             fo = F.lit(0)
-        write_rows = (
-            base.groupBy("bucket")
+        per_stage = per_stage.unionByName(
+            ledger_df.groupBy("bucket")
             .agg(F.sum("n_keep").alias("files_in"))
             .select(
                 F.lit(-1).alias("partition_id"),
@@ -163,82 +173,63 @@ def collect_lineage_all_stages(
                 F.lit("write").alias("stage"),
                 "files_in",
                 fo.cast("long").alias("files_out"),
+                F.lit(None)
+                .cast(ledger_df.schema["rule_hit_counts"].dataType)
+                .alias("rule_hit_counts"),
             )
         )
-        per_stage = per_stage.unionByName(write_rows)
-    verdict_only = collect_lineage(df_verdict, run_id, attempt).select(
-        "partition_id", "bucket", "rule_hit_counts"
-    )
-    return (
-        per_stage.join(verdict_only, ["partition_id", "bucket"], "left")
-        .withColumn(
-            "rule_hit_counts",
-            F.when(F.col("stage") == "verdict", F.col("rule_hit_counts")),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("attempt", F.lit(attempt))
-        .select(
-            "run_id",
-            "attempt",
-            "stage",
-            "partition_id",
-            "bucket",
-            "files_in",
-            "files_out",
-            "rule_hit_counts",
-        )
+    return per_stage.select(
+        F.lit(run_id).alias("run_id"),
+        F.lit(attempt).alias("attempt"),
+        "stage",
+        "partition_id",
+        "bucket",
+        "files_in",
+        "files_out",
+        F.when(F.col("stage") == "verdict", F.col("rule_hit_counts")).alias(
+            "rule_hit_counts"
+        ),
     )
 
 
-# `write` is appended by streaming.pipeline.score_micro_batch as a
-# sink-observed row (partition_id=-1), not derived here — but it IS part
-# of every batch's ledger, so consumers iterating this constant see it.
-STREAM_STAGES = ("score", "verdict", "scrub", "write")
+STREAM_LINEAGE_SCHEMA = (
+    "batch_id int, stage string, partition_id int, "
+    "files_in bigint, files_out bigint"
+)
 
 
-def collect_lineage_stream(scored_df: "DataFrame", batch_id: int) -> "DataFrame":
-    """Per-micro-batch, per-partition lineage for the streaming ingest path
-    (VERDICT r02 #4 'streaming lineage parity'): same derivation as the
-    batch path but keyed by ``batch_id`` instead of (run_id, bucket) — the
-    streaming DAG has no bucket repartition; its commit grain IS the
-    micro-batch. The caller writes this partitioned by batch_id with
-    dynamic partition overwrite, so a Structured Streaming retry replaces
-    exactly its own lineage partition (idempotent, like the data sink).
+def stream_lineage_rows(
+    batch_id: int, counts: list[tuple[int, int, int]], n_committed: int
+) -> "pd.DataFrame":
+    """Per-micro-batch lineage rows for the streaming ingest path (VERDICT
+    r02 #4 'streaming lineage parity'), built on the driver from the
+    collected per-partition ``counts`` = [(partition_id, rows, kept)].
+    Keyed by ``batch_id`` instead of (run_id, bucket): the streaming DAG
+    has no bucket repartition; its commit grain IS the micro-batch.
 
       score:   in = batch rows, out = batch rows
       verdict: in = batch rows, out = rule_keep rows
       scrub:   in = kept rows,  out = kept rows
-
-    The caller (streaming.pipeline.score_micro_batch) appends a
-    sink-observed `write` row (files_out counted from the written batch
-    partition) — same detection contract as the batch path.
+      write:   in = kept rows,  out = ``n_committed`` read back from the
+               written batch partition (partition_id = -1, sink grain) —
+               same detection contract as the batch path.
     """
-    from pyspark.sql import functions as F
+    import pandas as pd
 
-    base = (
-        scored_df.select(
-            F.spark_partition_id().alias("partition_id"), "rule_keep"
+    rows = [
+        (batch_id, stage, pid, fi, fo)
+        for pid, n_all, n_keep in sorted(counts)
+        for stage, fi, fo in (
+            ("score", n_all, n_all),
+            ("verdict", n_all, n_keep),
+            ("scrub", n_keep, n_keep),
         )
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("n_all"),
-            F.sum(F.col("rule_keep").cast("long")).alias("n_keep"),
-        )
-    )
-    stage_rows = F.array(
-        F.struct(F.lit("score").alias("stage"), F.col("n_all").alias("fi"), F.col("n_all").alias("fo")),
-        F.struct(F.lit("verdict").alias("stage"), F.col("n_all").alias("fi"), F.col("n_keep").alias("fo")),
-        F.struct(F.lit("scrub").alias("stage"), F.col("n_keep").alias("fi"), F.col("n_keep").alias("fo")),
-    )
-    return base.select(
-        "partition_id", F.explode(stage_rows).alias("s")
-    ).select(
-        F.lit(int(batch_id)).alias("batch_id"),
-        F.col("s.stage").alias("stage"),
-        "partition_id",
-        F.col("s.fi").alias("files_in"),
-        F.col("s.fo").alias("files_out"),
-    )
+    ]
+    rows.append((batch_id, "write", -1, sum(c[2] for c in counts), n_committed))
+    return pd.DataFrame(
+        rows, columns=["batch_id", "stage", "partition_id", "files_in", "files_out"]
+    ).astype({"batch_id": "int32", "partition_id": "int32",
+              "files_in": "int64", "files_out": "int64"})
 
 
 def conservation_ok(lineage_df: "DataFrame", total_in: int, total_out: int) -> bool:

@@ -744,6 +744,23 @@ FROM embeddings GROUP BY label
 """
 
 
+def round4(x):
+    """ROUND(x, 4) of a non-negative float64 array exactly as the DuckDB
+    oracle computes it: the product v = x*1e4 rounded half-up, then /1e4
+    (floor(v + 0.5) would round v = 0.49999999999999994 up, because the
+    sum itself rounds). Spark's F.round rounds the SHORTEST DECIMAL REPR
+    of x half-up instead, so within a few ulps of a 4-decimal midpoint the
+    two disagree in both directions (0.29005 -> F.round 0.2901, ROUND
+    0.29; 0.0018499999999999999 -> F.round 0.0018, ROUND 0.0019). The
+    cosine twins follow the oracle; both facts are pinned on
+    midpoint-stressing inputs by tests/test_cos_rounding.py."""
+    import numpy as np
+
+    v = x * 1e4
+    k = np.floor(v)
+    return (k + (v - k >= 0.5)) / 1e4
+
+
 def exact_cos_pairs(
     spark: SparkSession, sf_dir: str, tau: float, gate_rounded: bool
 ) -> DataFrame:
@@ -763,9 +780,9 @@ def exact_cos_pairs(
     scale, the fastest correct shape is ONE blocked NumPy matmul over the
     whole table (single applyInPandas group; S computed in BLOCK-row
     slabs exactly like _group_cosine_pairs so peak memory stays
-    block x n doubles). Rounding pinned to Spark's F.round HALF_UP via
-    floor(x*1e4 + 0.5)/1e4 — valid for every emittable value because
-    both gates (0.3 / 0.35) only pass positives. Output verified
+    block x n doubles). Rounding is ``round4`` — the oracle's ROUND,
+    valid for every emittable value because both gates (0.3 / 0.35) only
+    pass positives. Output verified
     BIT-IDENTICAL to the r5 HOF join at sf0.01 AND sf0.1 for both gate
     modes (271/990/4137/14933 pairs), and the DuckDB oracle is untouched.
     Measured sf0.1 tau=0.3: 46.9 s -> 0.54 s (~87x); the three checked
@@ -796,10 +813,10 @@ def exact_cos_pairs(
         for r0 in range(0, n, BLOCK):
             r1 = min(r0 + BLOCK, n)
             raw = (M[r0:r1] @ M[r0:].T) / np.outer(nrm[r0:r1], nrm[r0:])
-            # floor(x*1e4 + 0.5)/1e4 == Spark F.round HALF_UP for the
-            # non-negative values either gate can emit (negative raws are
-            # filtered out below before anything is emitted)
-            cos = np.floor(raw * 1e4 + 0.5) / 1e4
+            # the oracle's ROUND for the non-negative values either gate
+            # can emit (negative raws are filtered out below before
+            # anything is emitted)
+            cos = round4(raw)
             keep = (cos >= TAU) if GATE_ROUNDED else (raw >= TAU)
             bi, bj = np.nonzero(keep)
             gi, gj = bi + r0, bj + r0

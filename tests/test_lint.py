@@ -92,3 +92,35 @@ def test_no_rdd_api_in_hot_path():
             if re.search(r"\.rdd\b|parallelize\s*\(|mapPartitions\s*\(", code):
                 offenders.append(f"{p.name}:{i}: {line.strip()}")
     assert not offenders, "RDD API in hot path:\n" + "\n".join(offenders)
+
+
+# createDataFrame over a Python list/tuple/comprehension serializes the rows
+# through a Python-RDD `parallelize` — a Python worker task per call. The
+# commit paths build their small driver-side frames from pandas instead
+# (Arrow -> LocalTableScan, no Python worker).
+PY_LIST_CREATE = re.compile(r"createDataFrame\(\s*[\[(]")
+COMMIT_PATHS = ("pipeline.py", "plans", "streaming")
+
+
+def test_no_python_list_create_dataframe_in_commit_paths():
+    """A sanctioned exception carries a `py-rdd-ok:` comment (with its
+    reason) on the call line or the line above it."""
+    assert PY_LIST_CREATE.search('spark.createDataFrame(\n    [(1,)], "a int")')
+    assert not PY_LIST_CREATE.search("spark.createDataFrame(pdf, SCHEMA)")
+    offenders, scanned = [], 0
+    for rel in COMMIT_PATHS:
+        root = PKG / rel
+        for p in sorted([root] if root.is_file() else root.rglob("*.py")):
+            scanned += 1
+            src = p.read_text()
+            lines = src.splitlines()
+            for m in PY_LIST_CREATE.finditer(src):
+                i = src.count("\n", 0, m.start())
+                if "py-rdd-ok:" in lines[i] or (i and "py-rdd-ok:" in lines[i - 1]):
+                    continue
+                offenders.append(f"{p.relative_to(PKG)}:{i + 1}: {lines[i].strip()}")
+    assert scanned >= 4, "lint sanity: commit-path modules should be scanned"
+    assert not offenders, (
+        "createDataFrame over a Python list runs a Python-RDD parallelize "
+        "per call; build a pandas frame instead:\n" + "\n".join(offenders)
+    )

@@ -218,6 +218,146 @@ def test_micro_batch_retry_is_idempotent(spark, corpus_pdf, tmp_path):
         assert (lb[lb["stage"] == "write"]["partition_id"] == -1).all()
 
 
+SINK_SCHEMA = [
+    ("repo", "string"), ("path", "string"), ("commit", "string"),
+    ("lang", "string"), ("content", "string"), ("content_sha256", "string"),
+    ("n_chars", "bigint"), ("n_lines", "bigint"), ("max_line_len", "bigint"),
+    ("avg_line_len", "double"), ("alnum_ratio", "double"),
+    ("dup_line_frac", "double"), ("blank_frac", "double"),
+    ("autogen", "boolean"), ("lang_pred", "string"), ("lang_conf", "double"),
+    ("ppl", "double"), ("rule_keep", "boolean"),
+    ("rule_hits", "array<string>"), ("scrubbed_sha256", "string"),
+    ("batch_id", "int"),
+]
+
+
+def _oracle_rule_verdict(pdf, cfg):
+    """The stream's reference: the rule verdict without dedup."""
+    from spardaqus_spark import oracle
+    from spardaqus_spark.rules import apply_rules_pandas
+
+    scored = oracle.score(pdf).reset_index(drop=True)
+    keep, hits = apply_rules_pandas(cfg.rules, scored, cfg.verdict)
+    scored["rule_keep"] = keep.to_numpy()
+    scored["rule_hits"] = hits.to_numpy()
+    return scored
+
+
+def test_micro_batch_sink_schema_and_lineage_pinned(spark, corpus_pdf, tmp_path):
+    """The fused micro-batch writes the same sink columns, order and types
+    as the unfused score -> verdict -> scrub chain did, and per batch_id
+    exactly one score/verdict/scrub row per input partition (the pass is
+    narrow, so partition ids are the input's) plus one sink-grain write
+    row, all carrying the oracle's counts."""
+    out = str(tmp_path / "pin_out")
+    pdf = corpus_pdf[["repo", "path", "commit", "lang", "content"]].head(120)
+    bdf = spark.createDataFrame(pdf).repartition(3, "repo", "path", "commit")
+    spipe.score_micro_batch(bdf, 5, CFG, out)
+
+    sink = spark.read.parquet(out)
+    assert [(f.name, f.dataType.simpleString()) for f in sink.schema] == SINK_SCHEMA
+
+    ref = _oracle_rule_verdict(pdf, CFG)[["repo", "path", "commit", "rule_keep"]]
+    pids = (
+        bdf.select(F.spark_partition_id().alias("pid"), "repo", "path", "commit")
+        .toPandas()
+        .merge(ref, on=["repo", "path", "commit"])
+    )
+    assert len(pids) == len(pdf)
+    rows = []
+    for pid, g in pids.groupby("pid"):
+        n, k = len(g), int(g["rule_keep"].sum())
+        rows += [(5, "score", pid, n, n), (5, "verdict", pid, n, k),
+                 (5, "scrub", pid, k, k)]
+    n_keep = int(ref["rule_keep"].sum())
+    rows.append((5, "write", -1, n_keep, n_keep))
+    assert 0 < n_keep < len(pdf)
+
+    lin = spark.read.parquet(out + "_lineage")
+    assert [(f.name, f.dataType.simpleString()) for f in lin.schema] == [
+        ("stage", "string"), ("partition_id", "int"), ("files_in", "bigint"),
+        ("files_out", "bigint"), ("batch_id", "int"),
+    ]
+    got = sorted(
+        (r.batch_id, r.stage, r.partition_id, r.files_in, r.files_out)
+        for r in lin.collect()
+    )
+    assert got == sorted(rows)
+
+
+def test_micro_batch_weighted_verdict_matches_oracle(spark, corpus_pdf, tmp_path):
+    """The stream verdict runs in-worker through apply_rules_pandas (the
+    fused pass), so the weighted grammar (`weight:` votes summed against
+    `weighted_sum>=tau`, drop rules as vetoes) must agree with the oracle
+    there too: same kept set, same rule_hits, same scrubbed bytes."""
+    import hashlib
+    from pathlib import Path
+
+    from spardaqus_spark.config import load_config
+    from spardaqus_spark.kernels import scrub
+
+    cfg = load_config(
+        str(Path(__file__).resolve().parents[1] / "conf" / "pipeline_weighted.yaml")
+    )
+    assert cfg.verdict.startswith("weighted_sum>=")
+    out = str(tmp_path / "weighted_out")
+    pdf = corpus_pdf[["repo", "path", "commit", "lang", "content"]].head(300)
+    spipe.score_micro_batch(spark.createDataFrame(pdf), 0, cfg, out)
+
+    ref = _oracle_rule_verdict(pdf, cfg)
+    exp = ref[ref["rule_keep"]].copy()
+    assert 0 < len(exp) < len(ref), "vacuous weighted config on this slice"
+    lex = scrub.load_lexicon(cfg.lexicon_path)
+    exp["sha_o"] = scrub.scrub_series(exp["content"], lex).map(
+        lambda x: hashlib.sha256(x.encode()).hexdigest()
+    ).to_numpy()
+    got = (
+        spark.read.parquet(out)
+        .select("repo", "path", "commit", "rule_hits", "scrubbed_sha256")
+        .toPandas()
+    )
+    m = exp.merge(got, on=["repo", "path", "commit"], suffixes=("_o", "_s"))
+    assert len(got) == len(exp) == len(m)
+    assert (m["sha_o"] == m["scrubbed_sha256"]).all()
+    assert [list(h) for h in m["rule_hits_o"]] == [list(h) for h in m["rule_hits_s"]]
+
+
+def _sql_plans(spark, fn):
+    """Physical plans of the SQL executions ``fn`` runs (from the session's
+    SQL status store, after the listener bus drains)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        ex = store.executionsList()
+        return {
+            e.executionId(): e.physicalPlanDescription()
+            for e in (ex.apply(i) for i in range(ex.size()))
+        }
+
+    before = executions()
+    fn()
+    return [d for i, d in sorted(executions().items()) if i not in before]
+
+
+def test_micro_batch_runs_one_python_pass(spark, corpus_pdf, tmp_path):
+    """Every SQL execution of a micro-batch sees exactly ONE MapInPandas
+    node (the fused score -> verdict -> scrub pass, persisted once) and no
+    Python-RDD scan (`Scan ExistingRDD` is what createDataFrame over a
+    Python list plans to); the lineage rows land through a LocalTableScan."""
+    import re
+
+    pdf = corpus_pdf[["repo", "path", "commit", "lang", "content"]].head(60)
+    bdf = spark.createDataFrame(pdf)
+    out = str(tmp_path / "plan_out")
+    plans = _sql_plans(spark, lambda: spipe.score_micro_batch(bdf, 1, CFG, out))
+    n_py = [len(re.findall(r"^\(\d+\) MapInPandas", d, re.M)) for d in plans]
+    assert max(n_py) == 1, n_py
+    assert not any("ExistingRDD" in d for d in plans)
+    assert "LocalTableScan" in plans[-1]
+
+
 def test_streaming_update_and_complete_modes(spark, tmp_path):
     """§2.8 output modes: update + complete over a stateful agg (append is
     exercised by every other streaming test). Memory sink, availableNow."""
@@ -416,6 +556,60 @@ def test_minhash_candidate_stream_matches_batch(spark, tmp_path):
     )
 
 
+TTL_X = "the quick brown fox jumps over the lazy dog repeatedly for tests"
+TTL_Z = "completely different content about structured streaming state"
+
+
+def _minhash_ttl_protocol(spark, tmp_path, name, ttl_ms, phases):
+    """Run ``phases`` = [(file, doc_id, text, idle_after)] through
+    minhash_candidate_stream, one restarted availableNow query per phase
+    over the same source dir + checkpoint (so band-bucket state persists
+    between phases); with a TTL set, sleep past it after every phase
+    flagged ``idle_after``. Returns every emitted (d1, d2) pair and the
+    start time (epoch s) of each phase's data batch."""
+    import time
+    from datetime import datetime
+
+    src = tmp_path / f"ttl_src_{name}"
+    src.mkdir()
+    ckpt = str(tmp_path / f"ttl_ckpt_{name}")
+    out = str(tmp_path / f"ttl_out_{name}")
+    starts = []
+    for fname, doc_id, text, idle_after in phases:
+        # file sink (memory sink cannot recover from a checkpoint);
+        # the output dir accumulates every phase's emitted pairs
+        pd.DataFrame({"doc_id": [doc_id], "text": [text]}).to_parquet(
+            src / fname, index=False
+        )
+        stream = (
+            spark.readStream.schema("doc_id bigint, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        q = (
+            spipe.minhash_candidate_stream(stream, state_ttl_ms=ttl_ms)
+            .writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        # a ProcessingTimeTimeout query keeps running no-data batches for
+        # its timers, so availableNow never ends on its own (nor does
+        # processAllAvailable return): stop once the phase's row committed
+        deadline = time.time() + 120
+        while time.time() < deadline and not (
+            data := [p for p in q.recentProgress if p.numInputRows]
+        ):
+            time.sleep(0.05)
+        q.stop()
+        starts.append(datetime.fromisoformat(data[0].timestamp).timestamp())
+        if idle_after and ttl_ms is not None:
+            time.sleep(ttl_ms / 1000 + 1.5)  # idle past the TTL
+    return spark.read.parquet(out).select("d1", "d2").toPandas(), starts
+
+
 def test_minhash_stream_state_ttl_expires(spark, tmp_path):
     """r6 (VERDICT r05 #3): the config-gated ProcessingTimeTimeout TTL
     actually DROPS idle bucket state — no stale pairs after expiry.
@@ -432,53 +626,52 @@ def test_minhash_stream_state_ttl_expires(spark, tmp_path):
     Control: the identical protocol with state_ttl_ms=None emits the
     (1,2) pair in phase 3 (proves the expiry assertion is non-vacuous
     and the default path is byte-for-byte the r5 behavior)."""
-    import time
-
-    X = "the quick brown fox jumps over the lazy dog repeatedly for tests"
-    Z = "completely different content about structured streaming state"
-
-    def run_protocol(name: str, ttl_ms):
-        src = tmp_path / f"ttl_src_{name}"
-        src.mkdir()
-        ckpt = str(tmp_path / f"ttl_ckpt_{name}")
-        out = str(tmp_path / f"ttl_out_{name}")
-
-        def phase(fname: str, doc_id: int, text: str):
-            # file sink (memory sink cannot recover from a checkpoint);
-            # the output dir accumulates every phase's emitted pairs
-            pd.DataFrame({"doc_id": [doc_id], "text": [text]}).to_parquet(
-                src / fname, index=False
-            )
-            stream = (
-                spark.readStream.schema("doc_id bigint, text string")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(src))
-            )
-            q = (
-                spipe.minhash_candidate_stream(stream, state_ttl_ms=ttl_ms)
-                .writeStream.format("parquet")
-                .outputMode("append")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        phase("a.parquet", 1, X)
-        if ttl_ms is not None:
-            time.sleep(ttl_ms / 1000 + 1.5)  # idle past the TTL
-        phase("b.parquet", 3, Z)
-        phase("c.parquet", 2, X)
-        return spark.read.parquet(out).select("d1", "d2").toPandas()
-
-    control = run_protocol("off", None)
+    phases = [
+        ("a.parquet", 1, TTL_X, True),
+        ("b.parquet", 3, TTL_Z, False),
+        ("c.parquet", 2, TTL_X, False),
+    ]
+    control, _ = _minhash_ttl_protocol(spark, tmp_path, "off", None, phases)
     assert {(r.d1, r.d2) for r in control.itertuples()} == {(1, 2)}, (
         "control (no TTL) must emit the (1,2) pair — protocol is vacuous "
         f"otherwise; got {control.to_dict('records')}"
     )
-    expired = run_protocol("on", 1500)
+    expired, _ = _minhash_ttl_protocol(spark, tmp_path, "on", 1500, phases)
     assert len(expired) == 0, (
         "bucket state survived past the TTL: stale pair(s) "
         f"{expired.to_dict('records')} emitted after expiry"
+    )
+
+
+def test_minhash_stream_ttl_survives_redelivery(spark, tmp_path):
+    """A batch holding only a REDELIVERED doc_id takes the operator's
+    no-op early return; GroupState clears a ProcessingTimeTimeout on
+    every invocation unless it is set again, so that return must re-arm
+    the timer or the bucket never expires (unbounded state under exactly
+    the at-least-once delivery the TTL exists for).
+
+    Protocol: doc 1 ("X") seeds its buckets; doc 1 is redelivered in a
+    second file (no-op batch on the same buckets); sleep past the TTL;
+    doc 3 ("Z", disjoint buckets) sweeps expired timers; doc 2 (X's
+    text, same buckets) arrives — the buckets must be gone, so NO pair
+    emits. Without the re-arm, X's buckets lose their timer in the
+    redelivery batch and the (1,2) pair emits. The TTL is long enough
+    that X's buckets are still live when the redelivery arrives (checked
+    below), else the redelivery would just re-seed expired buckets."""
+    ttl_ms = 15000
+    phases = [
+        ("a.parquet", 1, TTL_X, False),
+        ("a_redelivered.parquet", 1, TTL_X, True),
+        ("b.parquet", 3, TTL_Z, False),
+        ("c.parquet", 2, TTL_X, False),
+    ]
+    got, starts = _minhash_ttl_protocol(
+        spark, tmp_path, "redeliver", ttl_ms, phases
+    )
+    assert starts[1] - starts[0] < ttl_ms / 1000, (
+        "redelivery arrived after the seed buckets expired: protocol vacuous"
+    )
+    assert len(got) == 0, (
+        "a redelivery-only batch disarmed the bucket TTL: stale pair(s) "
+        f"{got.to_dict('records')} emitted after expiry"
     )
