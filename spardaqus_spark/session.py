@@ -6,6 +6,15 @@ Scale notes (SURVEY.md §4.2):
 - shuffle partitions follow the session's default parallelism so the same
   code scales N -> 4N without retuning (scaling-efficiency mandate).
 - AQE on: runtime partition coalescing + skew-join splitting.
+- Local masters run the Python workers under `spardaqus_spark.pydaemon`
+  (`spark.python.daemon.module`): it drops Spark's `pyspark.zip`, py4j zip
+  and jar from the workers' path when the same pyspark is installed
+  unzipped, so workers import bytecode-cached modules and a task's
+  `importlib.invalidate_caches()` re-reads no archive directory (identity
+  mapInPandas on local[4], 4-core host: 0.29 -> 0.13 s for 1 task, 1.31 ->
+  0.37 s for 16; `tools/worker_overhead.py`). Other masters keep the
+  stock daemon: executors may not have the package importable when the
+  daemon launches.
 """
 
 from __future__ import annotations
@@ -75,6 +84,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or _default_shuffle(master)))
     )
+    if master == "local" or master.startswith("local["):
+        b = b.config("spark.python.daemon.module", "spardaqus_spark.pydaemon")
     return b.getOrCreate()
 
 

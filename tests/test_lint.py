@@ -5,7 +5,9 @@ land silently."""
 
 from __future__ import annotations
 
+import ast
 import re
+import sys
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parents[1] / "spardaqus_spark"
@@ -123,4 +125,62 @@ def test_no_python_list_create_dataframe_in_commit_paths():
     assert not offenders, (
         "createDataFrame over a Python list runs a Python-RDD parallelize "
         "per call; build a pandas frame instead:\n" + "\n".join(offenders)
+    )
+
+
+REPO = PKG.parent
+DAEMON_CONF = re.compile(r"""(?:["']|--conf[ =]\s*)spark\.python\.daemon\.module\b""")
+
+
+def test_daemon_module_set_only_in_session():
+    """Which daemon runs the Python workers is decided in one place
+    (`session.get_spark`: local masters only). Reading the setting is fine."""
+    offenders, found = [], 0
+    for p in sorted(REPO.rglob("*")):
+        rel = p.relative_to(REPO)
+        if (p.suffix not in (".py", ".sh", ".yaml", ".conf") or rel.parts[0] == "tests"
+                or any(part.startswith(".") for part in rel.parts)):
+            continue
+        for i, line in enumerate(p.read_text().splitlines(), 1):
+            if DAEMON_CONF.search(line) and "conf.get(" not in line:
+                if rel == Path("spardaqus_spark/session.py"):
+                    found += 1
+                else:
+                    offenders.append(f"{rel}:{i}: {line.strip()}")
+    assert found == 1, "session.py should set the worker daemon module once"
+    assert not offenders, "worker daemon module set outside session.py:\n" + "\n".join(offenders)
+
+
+def _non_stdlib_imports(tree) -> list:
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            names = ["." if node.level else node.module]
+        else:
+            continue
+        if any(n.split(".")[0] not in sys.stdlib_module_names for n in names):
+            out.append(node)
+    return out
+
+
+def test_pydaemon_imports_only_stdlib_before_path_fix():
+    """`python -m spardaqus_spark.pydaemon` runs the package __init__ and
+    the daemon module before the archives leave sys.path: a pyspark (or any
+    non-stdlib) import there would load from Spark's zip and silently undo
+    the fix. The one allowed non-stdlib import is in main(), after it."""
+    init = ast.parse((PKG / "__init__.py").read_text())
+    assert not _non_stdlib_imports(init), "spardaqus_spark/__init__.py must import stdlib only"
+    tree = ast.parse((PKG / "pydaemon.py").read_text())
+    main = next(n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "main")
+    fix = next(
+        n.lineno for n in ast.walk(main)
+        if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "drop_archives"
+    )
+    late = _non_stdlib_imports(tree)
+    assert late, "lint sanity: main() should import pyspark.daemon"
+    assert all(n.lineno > fix and main.lineno <= n.lineno <= main.end_lineno for n in late), (
+        "non-stdlib import before drop_archives() in pydaemon.py: lines "
+        + ", ".join(str(n.lineno) for n in late if n.lineno <= fix)
     )
